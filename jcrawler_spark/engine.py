@@ -212,7 +212,8 @@ class CrawlEngine:
         # opt-in authority-ordered scheduling (set_priority_scores)
         self._priority_scores: DataFrame | None = None
         # seen-prefilter (GenerationalBloom or ShardedCuckoo by
-        # config.seen_filter_kind — same facade, same blob slot)
+        # config.seen_filter_kind — same facade, same blob slot); None
+        # unless config.bloom_enabled
         self._bloom: (
             bloom_ops.GenerationalBloom | cuckoo_ops.ShardedCuckoo | None
         ) = None
@@ -264,25 +265,31 @@ class CrawlEngine:
             F.col("order_key").cast("long").alias("order_key"),
             F.format_string("%08x", F.col("order_key")).alias("path_key"),
         )
-        cfg = self.config
-        if cfg.seen_filter_kind == "cuckoo":
-            self._bloom = cuckoo_ops.ShardedCuckoo(
-                cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
-            )
-        else:
-            self._bloom = bloom_ops.GenerationalBloom(
-                cfg.bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_hashes,
-                grow_at_fill=cfg.bloom_grow_at_fill,
-            )
         self.store.stage_append("frontier_add", pending, 0)
         rank_cache.unpersist()
         self.order_counter = n_seeds
         self._pending_count = n_seeds
-        self.store.stage_blob("bloom", self._bloom.to_bytes(), 0)
+        if self.config.bloom_enabled:
+            self._bloom = self._new_seen_filter()
+            self.store.stage_blob("bloom", self._bloom.to_bytes(), 0)
         host_state = self.spark.createDataFrame([], schema=self._host_state_schema())
         self.store.stage_snapshot("host_state", host_state, 0)
         self.store.commit(0, self._counters())
         self.superstep = 0
+
+    def _new_seen_filter(
+        self,
+    ) -> bloom_ops.GenerationalBloom | cuckoo_ops.ShardedCuckoo:
+        """An empty seen-prefilter of ``config.seen_filter_kind``."""
+        cfg = self.config
+        if cfg.seen_filter_kind == "cuckoo":
+            return cuckoo_ops.ShardedCuckoo(
+                cfg.bloom_shards, cfg.cuckoo_buckets_per_shard
+            )
+        return bloom_ops.GenerationalBloom(
+            cfg.bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_hashes,
+            grow_at_fill=cfg.bloom_grow_at_fill,
+        )
 
     @staticmethod
     def _host_state_schema() -> T.StructType:
@@ -350,18 +357,26 @@ class CrawlEngine:
         self._any_host_errors = bool(c.get("any_host_errors", True))
         self.accept_set = list(c["accept_set"])
         self._last_compact = int(c.get("last_compact", 0))
+        # the prefilter exists only while bloom_enabled is set: a crawl run
+        # with it off stages no blob and never reads one
+        self._bloom = None
+        if not self.config.bloom_enabled:
+            return last
         blob = self.store.read_blob(last)
-        # dispatch by blob magic: a resumed crawl keeps the filter KIND it
-        # was seeded with, whatever the current config says
-        self._bloom = cuckoo_ops.seen_filter_from_bytes(blob)
-        if self.config.bloom_enabled and not c.get("seen_filter_active", False):
-            # The prefilter was toggled ON across resume: the stored blob
-            # never received the crawl's wave inserts (it was staged but
-            # inactive), so trusting it would mark every already-seen URL
-            # "fresh", SKIP the exact anti-join, and re-emit the whole
-            # crawl — and requeue_expired would delete never-inserted keys
-            # (which can evict a colliding key's only copy). Rebuild the
-            # filter from the committed seen_index so inserted == seen.
+        if blob is not None and c.get("seen_filter_active", False):
+            # dispatch by blob magic: a resumed crawl keeps the filter KIND
+            # it was seeded with, whatever the current config says
+            self._bloom = cuckoo_ops.seen_filter_from_bytes(blob)
+        else:
+            # The prefilter was toggled ON across resume: there is no blob,
+            # or the stored one stopped receiving the crawl's wave inserts
+            # when the prefilter was turned off. Trusting it would mark
+            # already-seen URLs "fresh", SKIP the exact anti-join, and
+            # re-emit them — and requeue_expired would delete never-inserted
+            # keys (which can evict a colliding key's only copy). Build the
+            # configured filter from the committed seen_index so
+            # inserted == seen.
+            self._bloom = self._new_seen_filter()
             seen = self._seen_hashes()
             if seen is not None:
                 if isinstance(self._bloom, cuckoo_ops.ShardedCuckoo):
@@ -611,10 +626,7 @@ class CrawlEngine:
         # projection (metadata + links array) is persisted. This halves the
         # corpus probes per superstep and makes the links column part of the
         # pages delta (S11 links.json memoization, JCrawler.java:1379-1398).
-        try:
-            fetched_full = self.fetcher.fetch(to_fetch, approx_rows=approx_rows)
-        except TypeError:  # legacy fetcher without the approx_rows hint
-            fetched_full = self.fetcher.fetch(to_fetch)
+        fetched_full = self.fetcher.fetch(to_fetch, approx_rows=approx_rows)
         extracted = extract.links_extractor_udf(
             include_crawl_delay=cfg.enforce_crawl_delay
         )("html", "url", "status", "content_type", "location")

@@ -639,28 +639,26 @@ def _rep_words_col(text: Column) -> Column:
     )
 
 
-def _grams_col(words: Column, n: int) -> Column:
-    """Array of \\x1f-joined word n-grams (empty when fewer than n words).
+def word_ngrams_col(words: Column, k: int, sep: str = " ") -> Column:
+    """Word k-grams of an already-split ``words`` array, each joined by
+    ``sep``: ``[words[i..i+k-1] for i in 1..size-k+1]``; empty when fewer
+    than k words, NULL when ``words`` is NULL (the DuckDB list-slice
+    comprehension's NULL behaviour).
 
-    Built as a chain of n−1 zip_withs against shifted slices — the
-    elements only ever enter through BOUND lambda variables. Referencing
-    `words` via element_at INSIDE a lambda body would re-evaluate the
-    whole words subtree per element (higher-order functions are
-    interpreted, no CSE), turning this O(nw·n) construction into
-    O(nw²·|text|) — measured as a multi-minute hang at sf0.01."""
-    g = words
-    for k in range(1, n):
-        nxt = F.slice(
-            words, k + 1, F.greatest(F.size(words) - k, F.lit(0))
-        )
-        g = F.zip_with(
-            g,
-            nxt,
-            lambda a, b: F.when(
-                a.isNull() | b.isNull(), F.lit(None)
-            ).otherwise(F.concat(a, F.lit(_GRAM_SEP), b)),
-        )
-    return F.filter(g, lambda x: x.isNotNull())
+    Every n-gram builder in the package goes through here. The k shifted
+    ``slice``s are zipped into structs and each struct is joined, so the
+    words reach the lambda only as its BOUND variable. A lambda body that
+    referred to ``words`` itself (``slice(words, i, k)`` per position)
+    would re-evaluate the whole subtree — the regex split of the text —
+    once per element: higher-order functions are interpreted without
+    common-subexpression elimination, and CollapseProject can inline a
+    precomputed words column back into such a lambda — turning an
+    O(tokens·k) build into O(tokens²) per document."""
+    m = F.greatest(F.size(words) - F.lit(k - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(words, j + 1, m) for j in range(k)])
+    return F.transform(
+        zipped, lambda s: F.concat_ws(sep, *[s[str(j)] for j in range(k)])
+    )
 
 
 def _total_word_chars(words: Column) -> Column:
@@ -672,7 +670,7 @@ def _total_word_chars(words: Column) -> Column:
 def top_ngram_char_frac_col(text: Column, n: int) -> Column:
     words = _rep_words_col(text)
     total = _total_word_chars(words).cast("double")
-    sg = F.array_sort(_grams_col(words, n))
+    sg = F.array_sort(word_ngrams_col(words, n, _GRAM_SEP))
     # single pass over the sorted grams: close each run as
     # run·charlen(gram), keep the max (same shape as top_bigram's
     # sorted-run max, weighted by the gram's word-char length)
@@ -705,7 +703,7 @@ def dup_ngram_char_frac_col(text: Column, n: int) -> Column:
     words = _rep_words_col(text)
     nw = F.size(words)
     total = _total_word_chars(words).cast("double")
-    grams = _grams_col(words, n)
+    grams = word_ngrams_col(words, n, _GRAM_SEP)
     ng = F.size(grams)
     # (gram, index) sorted by gram → neighbour-equality dup flags →
     # scatter back to gram order by re-sorting on the index
@@ -729,7 +727,7 @@ def dup_ngram_char_frac_col(text: Column, n: int) -> Column:
     # word j (1-based) is covered iff any dup gram i ∈ [j-n+1, j] ∩ [1, ng]
     # — a DILATION of gflags by n: OR of n front-padded shifted copies,
     # each an array-level slice (n static references to gflags, never a
-    # per-position slice inside a lambda — see _grams_col's note)
+    # per-position slice inside a lambda — see word_ngrams_col's note)
     covered = None
     post = F.array_repeat(F.lit(False), F.lit(n))
     for k in range(n):

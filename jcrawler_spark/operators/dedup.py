@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jcrawler_spark.functions import textops
+
 
 def hash60(col: Column) -> Column:
     """60-bit deterministic hash, oracle-replicable (see module doc)."""
@@ -37,16 +39,14 @@ def tokens_col(text: Column) -> Column:
 
 
 def shingles_col(text: Column, k: int) -> Column:
-    """Word k-gram shingles (space-joined); empty array when < k tokens."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """Word k-gram shingles (space-joined); empty array when < k tokens,
+    NULL for NULL text (as ``shingles_sql``).
+
+    The text is split ONCE and the shingles come from
+    ``textops.word_ngrams_col``: no lambda may capture the split, or it
+    is re-run per shingle — O(tokens²) per document, repeated for each of
+    ``minhash_signatures``' permutation columns."""
+    return textops.word_ngrams_col(tokens_col(text), k)
 
 
 def shingles_sql(text_expr: str, k: int) -> str:

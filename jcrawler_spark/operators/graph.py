@@ -5,13 +5,25 @@ semantics (SURVEY.md §2.4 T1) expressed as standalone operators.
 min-depth dedup per superstep — exactly the shape the crawl scheduler runs,
 minus fetch/extract. Joins shuffle on the node id; the visited set stays a
 DataFrame (no driver collect), so the loop scales with executors. AQE
-handles skewed hubs; the loop is depth-synchronous (one Spark job per
-level, not per node)."""
+handles skewed hubs; the loop is depth-synchronous: one action per level
+(a count of the level's new nodes), whose shuffle stages AQE runs as a few
+Spark jobs — the number depends on the graph, never on the node count."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _drop_checkpoints(held: list[DataFrame], keep: tuple) -> None:
+    """Free the stored blocks of the ``localCheckpoint``-ed frames in
+    ``held`` that are not in ``keep``. ``DataFrame.unpersist`` only
+    reaches the cache manager; a checkpoint's blocks belong to the RDD
+    under its ``LogicalRDD`` and otherwise stay until the JVM happens to
+    collect that RDD."""
+    for df in held:
+        if all(df is not k for k in keep):
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def bfs_min_depth(
@@ -24,34 +36,55 @@ def bfs_min_depth(
 ) -> DataFrame:
     """Minimum BFS depth of every node reachable from `sources`.
 
-    edges: (src, dst); sources: (id_col). Returns (id_col, depth) with
-    depth = length of the shortest path. Each superstep: join the frontier
-    to edges, anti-join the visited set, advance."""
-    visited = sources.select(
-        F.col(id_col).cast("long").alias("id"), F.lit(0).cast("long").alias("depth")
-    ).persist()
+    edges: (src, dst); sources: (id_col), duplicates allowed. Returns
+    (id_col, depth), one row per reached node, with depth = length of the
+    shortest path (sources at 0). Each superstep: join the frontier to
+    edges, anti-join the visited set, advance.
+
+    The loop-invariant (src, dst) projection is checkpointed once, so no
+    level re-reads or re-plans the caller's edge lineage. Each level's new
+    nodes are a lazy ``localCheckpoint`` whose ``count()`` is the
+    emptiness test — the level's one action — and the visited set is the
+    union under a lazy ``localCheckpoint``, materialised by the next
+    level's anti-join. Checkpoints no later level reads are freed as the
+    loop goes; the returned frame reads the last one."""
+    e = edges.select(
+        F.col(src_col).cast("long").alias("src"),
+        F.col(dst_col).cast("long").alias("dst"),
+    ).localCheckpoint(eager=True)
+    visited = (
+        sources.select(
+            F.col(id_col).cast("long").alias("id"),
+            F.lit(0).cast("long").alias("depth"),
+        )
+        .dropDuplicates(["id"])
+        .localCheckpoint(eager=False)
+    )
+    held = [e, visited]
     frontier = visited
-    depth = 0
-    while depth < max_depth:
-        depth += 1
+    for depth in range(1, max_depth + 1):
         nxt = (
-            frontier.join(edges, frontier["id"] == edges[src_col])
-            .select(F.col(dst_col).cast("long").alias("id"))
+            frontier.join(e, frontier["id"] == e["src"])
+            .select(F.col("dst").alias("id"))
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
             .withColumn("depth", F.lit(depth).cast("long"))
-            .persist()
+            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
-            nxt.unpersist()
+        n_new = nxt.count()
+        # the count materialised nxt and, through the anti-join, visited:
+        # no older checkpoint is read again
+        _drop_checkpoints(held, keep=(e, visited, nxt))
+        held = [e, visited, nxt]
+        if n_new == 0:
             break
-        new_visited = visited.unionByName(nxt).persist()
-        # cut the growing lineage chain: localCheckpoint keeps the loop's
-        # plan O(1) per superstep instead of O(depth)
-        new_visited = new_visited.localCheckpoint(eager=True)
-        visited.unpersist()
         frontier = nxt
-        visited = new_visited
+        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        held.append(visited)
+    else:
+        # max_depth cut: no level read the last union yet
+        visited.count()
+    _drop_checkpoints(held, keep=(visited,))
     return visited.select(F.col("id").alias(id_col), "depth")
 
 

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jcrawler_spark.functions import textops
+
 
 def _words_col(text: Column) -> Column:
     """Lowercased whitespace tokens, empties dropped (textops convention)."""
@@ -43,16 +45,10 @@ def _words_col(text: Column) -> Column:
 
 
 def _grams_col(text: Column, n: int) -> Column:
-    """Word n-gram strings (space-joined); empty array when < n tokens."""
-    ws = _words_col(text)
-    k = F.size(ws)
-    return F.when(
-        k >= n,
-        F.transform(
-            F.sequence(F.lit(1), k - n + 1),
-            lambda i: F.array_join(F.slice(ws, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """Word n-gram strings (space-joined) of the lowercased words; empty
+    array when < n tokens. Built by ``textops.word_ngrams_col`` from one
+    split: a lambda that captured the split would re-run it per gram."""
+    return textops.word_ngrams_col(_words_col(text), n)
 
 
 # ---------------------------------------------------------------------------
@@ -231,8 +227,6 @@ def source_stats(
 ) -> DataFrame:
     """Per-source roll-up: ``(source, n_docs, total_tokens, avg_quality,
     en_frac)`` — one map-side-combining groupBy, no joins."""
-    from jcrawler_spark.functions import textops
-
     text = F.col(text_col)
     return docs.groupBy(F.col(source_col).alias("source")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -272,14 +266,7 @@ def remove_cross_dup_spans(
         F.split(F.col(text_col), r"\s+"), lambda w: w != ""
     )
     base = docs.select(F.col(id_col), raw_ws.alias("ws"))
-    k = F.size(F.col("ws"))
-    grams = F.when(
-        k >= n,
-        F.transform(
-            F.sequence(F.lit(1), k - n + 1),
-            lambda i: F.array_join(F.slice(F.col("ws"), i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = textops.word_ngrams_col(F.col("ws"), n)
     occ = base.select(
         F.col(id_col), F.posexplode(grams).alias("pos0", "gram")
     ).select(F.col(id_col), (F.col("pos0") + 1).alias("pos"), "gram")

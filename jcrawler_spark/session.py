@@ -30,6 +30,12 @@ def export_pythonpath() -> None:
         )
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's physical memory, at least 1 GB, as a JVM size."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, total_mb // 2)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "jcrawler-spark",
@@ -53,7 +59,7 @@ def get_spark(
             shuffle_partitions = 2 * cores
     # local mode: one JVM holds driver + all executor threads — size it for
     # the machine (override with JCRAWLER_DRIVER_MEM)
-    driver_mem = os.environ.get("JCRAWLER_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("JCRAWLER_DRIVER_MEM") or _default_driver_mem()
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -158,10 +158,10 @@ def test_engine_cuckoo_crawl_matches_oracle(spark, tmp_path):
 
 
 def test_resume_with_prefilter_toggled_on_rebuilds_filter(spark, tmp_path):
-    # A crawl run with the prefilter OFF stages an empty, never-updated
-    # filter blob. Resuming with the prefilter ON must not trust it (every
-    # seen URL would look "fresh", skip the exact anti-join, and re-emit);
-    # resume() rebuilds the filter from seen_index so inserted == seen.
+    # A crawl run with the prefilter OFF builds no filter and stages no
+    # blob. Resuming with the prefilter ON must not start from an empty
+    # filter (every seen URL would look "fresh", skip the exact anti-join,
+    # and re-emit); resume() builds it from seen_index so inserted == seen.
     pages = corpus.build_pages_df(spark, 60, H, partitions=4).cache()
     root = str(tmp_path / "st")
     off_cfg = CrawlConfig(
@@ -176,7 +176,7 @@ def test_resume_with_prefilter_toggled_on_rebuilds_filter(spark, tmp_path):
         r["url_hash"]
         for r in eng.store.read("seen_index").select("url_hash").distinct().collect()
     ]
-    assert not eng._bloom.contains_hexes(seen).any()  # inactive, empty
+    assert eng._bloom is None and eng.store.read_blob() is None
 
     on_cfg = CrawlConfig(
         accept=ACCEPTS, max_docs=10_000, max_connections=None,

@@ -158,6 +158,45 @@ def test_checkpoint_resume_equivalence(spark, pages_df, tmp_path):
     assert eng_b2.emitted_urls() == eng_a.emitted_urls()
 
 
+def test_resume_prefilter_off_crawl_with_prefilter_on(
+    spark, pages_df, pages_local, tmp_path
+):
+    """A prefilter-off crawl builds no seen-filter and writes no filter
+    blob. Resumed with the prefilter on, the (default Bloom) filter is
+    built from seen_index, so the continued crawl emits exactly what an
+    uninterrupted one does — no already-seen URL slips past as fresh."""
+    import os
+
+    from jcrawler_spark.operators import bloom as bloom_ops
+
+    off = CrawlConfig(accept=ACCEPTS, max_docs=500, max_connections=None)
+    root = str(tmp_path / "st")
+    eng = CrawlEngine(spark, off, SyntheticFetcher(pages_df), root)
+    eng.seed(_seeds())
+    for _ in range(2):
+        eng.step()
+    assert eng._bloom is None
+    assert eng.store.read_blob() is None
+    assert not os.path.exists(os.path.join(root, "bloom"))
+
+    on = CrawlConfig(
+        accept=ACCEPTS, max_docs=500, max_connections=None, bloom_enabled=True
+    )
+    eng2 = CrawlEngine(spark, on, SyntheticFetcher(pages_df), root)
+    eng2.resume()
+    assert isinstance(eng2._bloom, bloom_ops.GenerationalBloom)
+    seen = [
+        r["url_hash"]
+        for r in eng2.store.read("seen_index").select("url_hash").collect()
+    ]
+    assert seen and bool(eng2._bloom.contains_hexes(seen).all())
+    assert eng2.store.read_blob() is not None  # the build is committed
+    eng2.run(seeds=None, max_supersteps=40)
+    oracle = crawl_oracle(pages_local, _seeds(), _accept_set(), max_docs=500)
+    assert eng2.emitted_urls() == oracle.emitted
+    assert eng2.visited_set() == oracle.visited
+
+
 def test_resume_backfills_legacy_seen_index(spark, pages_df, tmp_path):
     """A state root committed BEFORE the slim seen_index table existed must
     not resume with an empty visited set (ADVICE r3): resume() backfills

@@ -298,7 +298,7 @@ def test_ngram_repetition_cols_match_pure(spark):
     composite. The signals are selected two-layer (raw cols, then
     thresholds over column REFS) — combining all nine heavy lambda
     trees with the composite in ONE projection list sends Catalyst
-    super-linear (see textops._grams_col's note)."""
+    super-linear (see textops.word_ngrams_col's note)."""
     import pyspark.sql.functions as F
 
     texts = [
