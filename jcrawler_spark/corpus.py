@@ -111,10 +111,10 @@ def page_record(i: int, n_pages: int, n_hosts: int, body_repeat: int = 1) -> dic
     """One deterministic pages-table row. Pure — shared by the Spark
     generator and the pure-Python crawl oracle.
 
-    body_repeat multiplies the body text block (1 ≈ 0.5 KB pages for unit
-    tests; ~25 ≈ 12 KB pages approximating real web pages for the scaling
-    benchmark — extraction cost per page then dominates superstep
-    overhead, which is the regime a real crawl runs in)."""
+    body_repeat multiplies the body text block (1 ≈ 0.4 KB of html per 200
+    page for unit tests; 25 ≈ 4.4 KB for the scaling benchmark —
+    extraction cost per page then dominates superstep overhead, which is
+    the regime a real crawl runs in)."""
     h = host_of(i, n_hosts)
     url = url_of(i, n_hosts)
     status = status_of(i)

@@ -11,7 +11,7 @@ superstep loop over DataFrames with snapshot-committed state:
     links = explode(extract_links_udf) (JCrawler.java:420-559)
           → self-filter → per-page first-wins dedup → accept filter
             (exact reference order, JCrawler.java:1233-1244)
-    new   = links ⟕anti seen (Bloom-prefiltered) ⟕anti pending, ranked
+    new   = links ⟕anti frontier adds ⟕anti seen (opt-in prefilter), ranked
     commit(pages Δ, emitted Δ, seen Δ, pending snapshot, host_state, bloom, lineage)
 
 Determinism contract: the reference's default parallel mode has undefined
@@ -26,8 +26,19 @@ Scale design (north rule):
     (host, salt16) caps a mega-host partition at budget×salt rows, phase 2
     exact row_number over host — so no single task ever sees a mega-host's
     whole frontier (skew defusal beyond AQE).
-  * the seen gate is Bloom-prefilter + exact anti-join on url_hash; the Bloom
-    kills the common already-seen rows before the shuffle.
+  * the seen gate is an exact anti-join on url_hash against the bucketed
+    seen_index. A Bloom or cuckoo prefilter in front of it is opt-in
+    (config.bloom_enabled, off by default: it measured slower than the
+    plain anti-join at the sizes tried, BENCH/BASELINE.md).
+  * a superstep's intermediates (the wave, the fetched pages, the links,
+    the ranked candidates) are lazy localCheckpoints, not cached plans:
+    the first job that reads one stores its rows, every later plan of the
+    step starts from that LogicalRDD leaf instead of re-planning the
+    frontier-read → fetch → extract lineage, and the step frees the blocks
+    through their RDDs once its writes have landed (checkpoints.py).
+  * new frontier rows are ranked in the JVM: offsets[pid] + row_number()
+    over a monotone bucket of the parent's order_key, with the per-bucket
+    counts riding the step's one stats collect (operators/rank.py).
   * time is a logical clock (1 superstep = config.seconds_per_superstep) so
     the failing-host backoff (10 min, JCrawler.java:870-872) and crawl-delay
     are deterministic and testable.
@@ -46,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jcrawler_spark import schemas
+from jcrawler_spark.checkpoints import drop_checkpoints
 from jcrawler_spark.config import CrawlConfig, TraversalType
 from jcrawler_spark.functions import generators, urlops
 from jcrawler_spark.operators import accept as accept_ops
@@ -208,7 +220,10 @@ class CrawlEngine:
         self.order_counter = 0
         self._pending_count = 0
         self._any_host_errors = False
-        self._rank_cache: DataFrame | None = None
+        # the lazy localCheckpoints the current superstep reads (wave,
+        # fetched, links, ranked candidates); freed at its end — or, if a
+        # step died mid-flight, at the start of the next one
+        self._ckpts: list[DataFrame] = []
         # opt-in authority-ordered scheduling (set_priority_scores)
         self._priority_scores: DataFrame | None = None
         # seen-prefilter (GenerationalBloom or ShardedCuckoo by
@@ -266,7 +281,7 @@ class CrawlEngine:
             F.format_string("%08x", F.col("order_key")).alias("path_key"),
         )
         self.store.stage_append("frontier_add", pending, 0)
-        rank_cache.unpersist()
+        drop_checkpoints([rank_cache])
         self.order_counter = n_seeds
         self._pending_count = n_seeds
         if self.config.bloom_enabled:
@@ -535,9 +550,11 @@ class CrawlEngine:
 
         tick = [t0]
         is_dfs = self._is_dfs()
-        pending = self._read_frontier()
-        if pending is None:
+        self._drop_step_checkpoints()  # left by a step that died mid-flight
+        adds = self.store.read("frontier_add")
+        if adds is None:
             return None
+        pending = self._pending_view(adds)
         # BFS tracks the pending count exactly — empty frontier needs no job.
         # (DFS pending can hold only already-seen rediscoveries, so it must
         # probe with a real count.)
@@ -545,11 +562,11 @@ class CrawlEngine:
             return None
 
         wave, approx_rows = self._select_wave(pending)
-        wave = wave.persist()
+        wave = self._checkpoint(wave)
         if is_dfs:
             wave_n = wave.count()
             if wave_n == 0:
-                wave.unpersist()
+                self._drop_step_checkpoints()
                 return None
         else:
             wave_n = -1  # filled from the write-time observation below
@@ -623,9 +640,10 @@ class CrawlEngine:
         # ---- fetch + extract in ONE pass (S8 + §2.3) ----
         # The fetch join and the extraction UDF run in the same job: html is
         # read exactly once, links land in a column, and only the html-free
-        # projection (metadata + links array) is persisted. This halves the
-        # corpus probes per superstep and makes the links column part of the
-        # pages delta (S11 links.json memoization, JCrawler.java:1379-1398).
+        # projection (metadata + links array) is checkpointed. This halves
+        # the corpus probes per superstep and makes the links column part
+        # of the pages delta (S11 links.json memoization,
+        # JCrawler.java:1379-1398).
         fetched_full = self.fetcher.fetch(to_fetch, approx_rows=approx_rows)
         extracted = extract.links_extractor_udf(
             include_crawl_delay=cfg.enforce_crawl_delay
@@ -637,10 +655,8 @@ class CrawlEngine:
             links_col = F.coalesce(F.col("links"), extracted)
         else:
             links_col = extracted
-        fetched = (
-            fetched_full.withColumn("links", links_col)
-            .drop("html", "text")
-            .persist()
+        fetched = self._checkpoint(
+            fetched_full.withColumn("links", links_col).drop("html", "text")
         )
 
         # lineage leg: per-partition wave stats — its collect doubles as the
@@ -708,9 +724,9 @@ class CrawlEngine:
         )
 
         # rank-independent state writes: pages + seen_index depend only on
-        # the persisted wave results.  Staged after the stats collect below
-        # (fetched cache warm); all staging jobs run concurrently in the
-        # store pool either way.  Concurrent readers of seen_index are safe:
+        # the checkpointed wave results.  Staged after the stats collect
+        # below (fetched already stored); all staging jobs run concurrently
+        # in the store pool either way.  Concurrent readers of seen_index are safe:
         # every committed read filters superstep <= last-committed, captured
         # at plan time, so rows staged at superstep s are stats-pruned.
         state_appends = {
@@ -752,15 +768,14 @@ class CrawlEngine:
         )
         ignored = None
         # the ignored-domains aggregate, the robots-rules leg and the
-        # crawl-delay leg re-traverse `links`; persist once if any second
-        # consumer exists
-        links_persisted = (
+        # crawl-delay leg re-traverse `links`; checkpoint once if any
+        # second consumer exists
+        if (
             cfg.track_ignored_domains
             or cfg.enforce_robots
             or cfg.enforce_crawl_delay
-        )
-        if links_persisted:
-            links = links.persist()
+        ):
+            links = self._checkpoint(links)
         ignored_leg = None
         if cfg.track_ignored_domains:
             ignored = (
@@ -769,7 +784,7 @@ class CrawlEngine:
                 .distinct()
             )
             # emptiness rides the stats collect below (kind='ign', one
-            # global-count row over the persisted links cache): a superstep
+            # global-count row over the checkpointed links): a superstep
             # whose accept set covers every link — the accept-everything
             # 10^10-frontier crawl shape — skips the ignored_domains write
             # job entirely instead of appending an empty delta
@@ -790,7 +805,8 @@ class CrawlEngine:
         accepted = links.where(F.col("accepted"))
 
         # ---- horizon dedup (T4/T5): wave-internal first-wins, then
-        # Bloom-prefiltered exact anti-join vs seen, anti-join vs pending.
+        # anti-join vs the frontier adds, exact anti-join vs seen (behind
+        # the opt-in Bloom/cuckoo prefilter).
         # DFS preorder skips the horizon gates: it dedups at visit time
         # (Guava preorder semantics), so rediscoveries stay pending.
         accepted = accepted.withColumn("url_hash", urlops.url_hash_col(F.col("url")))
@@ -810,11 +826,15 @@ class CrawlEngine:
             )
             # not already pending (horizonSet gate,
             # ParallelGraphTraverser.java:96-105); wave ⊆ seen this
-            # superstep. Runs BEFORE the bloom split: here cand still
+            # superstep. It runs against every frontier ADD, not the
+            # composed pending view: adds ⊆ pending ∪ seen and
+            # pending ⊆ adds, and the seen anti-join below always follows,
+            # so the result is the same with one join and one seen_index
+            # scan fewer. Runs BEFORE the bloom split: here cand still
             # carries the window's hashpartitioning(url_hash), so with a
             # bucketed frontier this anti-join adds NO exchange at all —
             # after the fresh∪maybe union that partitioning would be lost.
-            cand = cand.join(pending.select("url_hash"), "url_hash", "left_anti")
+            cand = cand.join(adds.select("url_hash"), "url_hash", "left_anti")
             seen_tbl = self._seen_hashes()
             if cfg.bloom_enabled and self._bloom is not None:
                 pf = (
@@ -848,18 +868,14 @@ class CrawlEngine:
         sort_cols = ["src_order_key", "order_in_page", "url"]
         npart = self.spark.sparkContext.defaultParallelism
         if inline:
-            cand = cand.withColumn(
-                "__pid",
-                rank_ops.pid_expr(
-                    F.col("src_order_key"), npart, self.order_counter
-                ),
-            ).persist()
-            # normally None here (end-of-step always clears it); non-None
-            # only when a prior step() died mid-flight — free that
-            # orphaned cache before pinning this superstep's
-            if self._rank_cache is not None:
-                self._rank_cache.unpersist()
-            self._rank_cache = cand
+            cand = self._checkpoint(
+                cand.withColumn(
+                    "__pid",
+                    rank_ops.pid_expr(
+                        F.col("src_order_key"), npart, self.order_counter
+                    ),
+                )
+            )
             counts_leg = (
                 cand.groupBy("__pid")
                 .agg(F.count(F.lit(1)).alias("rows_in"))
@@ -904,16 +920,8 @@ class CrawlEngine:
                 offsets[pid] = new_n
                 new_n += c
             if new_n > 0:
-                ranked = rank_ops.rank_from_offsets(
-                    cand, sort_cols, offsets, npart
-                )
+                ranked = rank_ops.rank_from_offsets(cand, sort_cols, offsets)
                 new_rows = self._rank_select(ranked, s)
-            else:
-                # nothing discovered: rank_from_offsets is skipped, so the
-                # persisted cand has no consumer — free it now instead of
-                # holding block-manager memory until end-of-step
-                self._rank_cache.unpersist()
-                self._rank_cache = None
         else:
             new_rows, new_n = self._rank_new(cand, s)
             if new_n == 0:
@@ -1152,18 +1160,29 @@ class CrawlEngine:
             pending_left=pending_left,
             wall_ms=int((time.monotonic() - t0) * 1000),
         )
-        wave.unpersist()
-        fetched.unpersist()
-        if links_persisted:
-            links.unpersist()
-        if self._rank_cache is not None:
-            self._rank_cache.unpersist()
-            self._rank_cache = None
+        self._drop_step_checkpoints()
         return stats
 
+    def _checkpoint(self, df: DataFrame) -> DataFrame:
+        """A lazy localCheckpoint of ``df`` that the superstep holds until
+        its end: the first job that reads it stores its rows, and every
+        later plan of the step starts from them instead of re-planning the
+        frontier-read → fetch → extract lineage under it."""
+        df = df.localCheckpoint(eager=False)
+        self._ckpts.append(df)
+        return df
+
+    def _drop_step_checkpoints(self) -> None:
+        drop_checkpoints(self._ckpts)
+        self._ckpts = []
+
     def _read_frontier(self) -> DataFrame | None:
-        """The pending view over the frontier delta log: adds minus every
-        add whose hash was consumed at-or-after its add superstep (so a
+        adds = self.store.read("frontier_add")
+        return None if adds is None else self._pending_view(adds)
+
+    def _pending_view(self, adds: DataFrame) -> DataFrame:
+        """The pending view over the frontier delta log: ``adds`` minus
+        every add whose hash was consumed at-or-after its add superstep (so a
         requeue of a previously consumed hash — a LATER add — survives).
 
         The consumed set is the slim bucketed seen_index — the (url_hash,
@@ -1173,9 +1192,6 @@ class CrawlEngine:
         at or after its add superstep). Both sides of this anti-join are
         bucketed on url_hash, so the compose is shuffle-free; the
         incremental read touches only files at or after the floor."""
-        adds = self.store.read("frontier_add")
-        if adds is None:
-            return None
         consumed = self.store.read(
             "seen_index", min_superstep=self._last_compact + 1
         )
@@ -1304,12 +1320,10 @@ class CrawlEngine:
         (parent order, in-page order): range-partitioned Arrow rank
         (operators/rank.py) — no single-partition window, no per-row
         Python, scales with executors."""
-        ranked, total, cache = rank_ops.with_global_rank(
+        ranked, total, ckpt = rank_ops.with_global_rank(
             cand, ["src_order_key", "order_in_page", "url"], out_col="rank"
         )
-        if self._rank_cache is not None:
-            self._rank_cache.unpersist()
-        self._rank_cache = cache
+        self._ckpts.append(ckpt)
         return self._rank_select(ranked, s), total
 
     def _rank_select(self, ranked: DataFrame, s: int) -> DataFrame:

@@ -27,7 +27,8 @@ twins) and a Spark ``Column`` form (JVM higher-order functions, map-only,
 zero Exchanges — the gate runs at scan speed, same design as
 ``textops.gopher_pass_col``). Whitespace semantics match the repo's
 Java-parity convention: trim strips ASCII spaces only; word-split is
-``\\s+`` with empty tokens dropped.
+Java's ASCII ``\\s+`` (``[ \\t\\n\\x0B\\f\\r]``, so a no-break space
+joins words) with empty tokens dropped.
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from jcrawler_spark.functions.textops import _JAVA_WS
+
 # the paper's terminal marks: . ! ? and end quotation marks
 TERMINAL_MARKS = (".", "!", "?", '"', "'")
 # placeholder for the LDNOOBW bad-word list (see module doc)
@@ -44,7 +47,6 @@ BANNED_WORDS = ("unsafeword", "blockedterm")
 MIN_WORDS_PER_LINE = 3
 MIN_SENTENCES = 5
 
-_WS = re.compile(r"\s+")
 _SENTENCE_MARK = re.compile(r"[.!?]")
 
 
@@ -54,7 +56,7 @@ _SENTENCE_MARK = re.compile(r"[.!?]")
 
 
 def _words(line: str) -> list[str]:
-    return [w for w in _WS.split(line) if w]
+    return [w for w in _JAVA_WS.split(line) if w]
 
 
 def line_kept(line: str) -> bool:

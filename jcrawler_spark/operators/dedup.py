@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jcrawler_spark.checkpoints import drop_checkpoints
 from jcrawler_spark.functions import textops
 
 
@@ -271,6 +272,9 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .persist()
     )
+    # the previous round's checkpoint, kept as the frame that was
+    # checkpointed (``labels`` is a projection of it)
+    prev_ckpt = None
     for _ in range(max_iter):
         prop = edges.join(labels, edges["src"] == labels["id"]).select(
             F.col("dst").alias("id"),
@@ -291,7 +295,14 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         changed = new_labels.where(F.col("comp") != F.col("old")).count()
-        labels.unpersist()  # frees the previous round's checkpoint blocks
+        # the count materialised new_labels: no round reads the previous
+        # labels again (the first round's are cached, later ones are
+        # checkpoints, which unpersist() does not reach)
+        if prev_ckpt is None:
+            labels.unpersist()
+        else:
+            drop_checkpoints([prev_ckpt])
+        prev_ckpt = new_labels
         labels = new_labels.drop("old")
         if changed == 0:
             break

@@ -14,16 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _drop_checkpoints(held: list[DataFrame], keep: tuple) -> None:
-    """Free the stored blocks of the ``localCheckpoint``-ed frames in
-    ``held`` that are not in ``keep``. ``DataFrame.unpersist`` only
-    reaches the cache manager; a checkpoint's blocks belong to the RDD
-    under its ``LogicalRDD`` and otherwise stay until the JVM happens to
-    collect that RDD."""
-    for df in held:
-        if all(df is not k for k in keep):
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
+from jcrawler_spark.checkpoints import drop_checkpoints
 
 
 def bfs_min_depth(
@@ -74,7 +65,7 @@ def bfs_min_depth(
         n_new = nxt.count()
         # the count materialised nxt and, through the anti-join, visited:
         # no older checkpoint is read again
-        _drop_checkpoints(held, keep=(e, visited, nxt))
+        drop_checkpoints(held, keep=(e, visited, nxt))
         held = [e, visited, nxt]
         if n_new == 0:
             break
@@ -84,7 +75,7 @@ def bfs_min_depth(
     else:
         # max_depth cut: no level read the last union yet
         visited.count()
-    _drop_checkpoints(held, keep=(visited,))
+    drop_checkpoints(held, keep=(visited,))
     return visited.select(F.col("id").alias(id_col), "depth")
 
 

@@ -9,6 +9,10 @@ layout is preserved). Total cost: the range shuffle + one counts job;
 everything is distributed and the driver only ever sees one integer per
 partition.
 
+When the per-bucket counts are already known (a monotone bucket id over a
+known key domain, `pid_expr`), `rank_from_offsets` skips the sampling and
+the counts job: it is one window over the bucket id, all in the JVM.
+
 Used by the crawl engine to assign FIFO `order_key`s to newly discovered
 frontier rows (SURVEY.md §2.4 T8) — at 10^10-frontier scale a global window
 would funnel the wave through one task; this never does."""
@@ -18,9 +22,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jcrawler_spark.checkpoints import drop_checkpoints
 
 
 def with_global_rank(
@@ -29,28 +35,30 @@ def with_global_rank(
     out_col: str = "rank",
     num_partitions: int | None = None,
 ) -> tuple[DataFrame, int, DataFrame]:
-    """Returns (ranked_df, n, cache_handle).
+    """Returns (ranked_df, n, checkpoint).
 
     ranked_df = df + out_col (long rank 0..n-1 ordered by sort_cols);
-    cache_handle is the persisted intermediate the counts job materialized —
-    callers unpersist it once downstream consumers are done."""
+    checkpoint is the lazy ``localCheckpoint`` the counts job materialized
+    and ranked_df reads — callers free it with
+    ``checkpoints.drop_checkpoints`` once downstream consumers are done."""
     spark = df.sparkSession
     npart = num_partitions or spark.sparkContext.defaultParallelism
-    # cache the input: repartitionByRange runs a SAMPLING pass before the
-    # shuffle — without this the (often expensive) upstream pipeline would
-    # evaluate twice
-    df = df.persist()
-    # bake the partition id into the cached rows: TaskContext.partitionId()
-    # is only stable within one consuming stage (a later union/join renumbers
-    # partitions), but a column captured at cache time is plan-independent
+    # checkpoint the input: repartitionByRange runs a SAMPLING pass before
+    # the shuffle — without this the (often expensive) upstream pipeline
+    # would evaluate twice
+    src = df.localCheckpoint(eager=False)
+    # bake the partition id into the stored rows: TaskContext.partitionId()
+    # is only stable within one consuming stage (a later union/join
+    # renumbers partitions), but a column captured at checkpoint time is
+    # plan-independent
     parted = (
-        df.repartitionByRange(npart, *[F.col(c) for c in sort_cols])
+        src.repartitionByRange(npart, *[F.col(c) for c in sort_cols])
         .sortWithinPartitions(*sort_cols)
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
+        .localCheckpoint(eager=False)
     )
     counts = parted.groupBy("__pid").count().collect()
-    df.unpersist()  # parted is materialized now; the input cache is done
+    drop_checkpoints([src])  # parted is materialized now
     counts.sort(key=lambda r: r["__pid"])
     offsets: dict[int, int] = {}
     total = 0
@@ -96,47 +104,25 @@ def rank_from_offsets(
     df: DataFrame,
     sort_cols: list[str],
     offsets: dict[int, int],
-    npart: int,
     out_col: str = "rank",
     pid_col: str = "__pid",
 ) -> DataFrame:
     """Dense global rank when per-pid counts are ALREADY known (the engine
     folds the counts into its lineage collect — zero extra jobs here):
-    shuffle by the precomputed monotone pid, sort (pid, keys) within
-    partitions, then assign offsets[pid] + position via one Arrow pass.
-    Unlike with_global_rank's one-pid-per-partition layout, a physical
-    partition here may hold SEVERAL pids (hash(pid) collisions), so the
-    Arrow pass walks pid runs; a pid never spans two partitions, so
-    per-pid cursors stay partition-local and the rank is exact."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(offsets)
-    out_fields = [f for f in df.schema.fields if f.name != pid_col]
-    out_schema = T.StructType(
-        out_fields + [T.StructField(out_col, T.LongType(), False)]
+    ``offsets[pid] + row_number() OVER (PARTITION BY pid ORDER BY
+    sort_cols) - 1``. Because pid is monotone in the leading sort key and
+    offsets accumulate the counts in pid order, that is the global rank
+    over ``sort_cols``. One hash shuffle on pid and one sort, all in the
+    JVM: no Python worker on the path."""
+    off = F.create_map(
+        *[
+            x
+            for pid, o in sorted(offsets.items())
+            for x in (F.lit(pid), F.lit(o).cast("long"))
+        ]
     )
-
-    def add_rank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        cursors: dict[int, int] = {}
-        for b in batches:
-            pids = b[pid_col].to_numpy()
-            ranks = np.empty(len(b), dtype="int64")
-            i = 0
-            while i < len(b):
-                pid = int(pids[i])
-                j = i
-                while j < len(b) and pids[j] == pid:
-                    j += 1
-                nxt = cursors.get(pid, bc.value.get(pid, 0))
-                ranks[i:j] = np.arange(nxt, nxt + (j - i))
-                cursors[pid] = nxt + (j - i)
-                i = j
-            b = b.drop(columns=[pid_col])
-            b[out_col] = ranks
-            yield b
-
-    parted = df.repartition(npart, F.col(pid_col)).sortWithinPartitions(
-        pid_col, *sort_cols
-    )
-    return parted.mapInPandas(add_rank, schema=out_schema)
+    w = Window.partitionBy(pid_col).orderBy(*sort_cols)
+    return df.withColumn(
+        out_col,
+        F.element_at(off, F.col(pid_col)) + F.row_number().over(w) - 1,
+    ).drop(pid_col)

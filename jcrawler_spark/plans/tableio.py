@@ -526,8 +526,10 @@ class SnapshotStore:
         else:
             # small state (broadcast beats bucket co-location) or time
             # travel: exact committed file list, plain parquet read
-            # (bucketing metadata is lost, correctness is not)
-            df = self.spark.read.parquet(
+            # (bucketing metadata is lost, correctness is not). The
+            # manifest's schema is given, so no job reads parquet footers
+            # to infer it.
+            df = self.spark.read.schema(bm["ddl"]).parquet(
                 *[os.path.join(self.root, r) for r in bm["files"]]
             )
         lo = max(bm.get("floor", 0), min_superstep or 0)

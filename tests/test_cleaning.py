@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -61,13 +61,17 @@ def test_c4_page_rules():
     assert c4.c4_page_pass(five + "\nan unsafewording appears")
 
 
+# U+00A0 (no-break space) is whitespace to Python's \s but not to Java's:
+# it joins two words in both forms
 _TEXTS = st.text(
-    alphabet=st.sampled_from(list("ab .!?\"'\n\t{jJavScript")), max_size=120
+    alphabet=st.sampled_from(list("ab .!?\"'\n\t{jJavScript\u00a0")),
+    max_size=120,
 )
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(_TEXTS, min_size=1, max_size=8))
+@example(["one\u00a0two three.", "a\u00a0b c d.\n" * 5, "\u00a0 x y z!"])
 def test_c4_pure_column_parity(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     stats = c4.c4_stats_cols(F.col("text"))

@@ -379,6 +379,27 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_frees_round_checkpoints(spark):
+    """A 13-node chain takes a dozen propagation rounds, each a
+    localCheckpoint; none may outlive the call except the one the result
+    itself reads (unpersist() does not reach a checkpoint's blocks)."""
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
+    )
+    before = persisted()
+    out = dedup.connected_components(pairs)
+    got = {r["id"]: r["comp"] for r in out.collect()}
+    assert got == {i: 0 for i in range(13)}
+    result_rdd = (
+        out._jdf.queryExecution().logical().collectLeaves().apply(0).rdd().id()
+    )
+    assert persisted() - before <= {result_rdd}
+
+
 def test_duplicate_groups_and_dedup_corpus(spark):
     """End-to-end clustering: planted near-dup trio + exact pair + two
     singletons -> groups keyed by min id; dedup_corpus keeps exactly the

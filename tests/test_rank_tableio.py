@@ -1,12 +1,22 @@
-"""Unit tests for the global-rank operator and the snapshot store."""
+"""Unit tests for the global-rank operators, the crawl engine's frontier
+rank, and the snapshot store."""
 
 from __future__ import annotations
 
 import random
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from jcrawler_spark.operators.rank import with_global_rank
+from jcrawler_spark import corpus
+from jcrawler_spark.checkpoints import drop_checkpoints
+from jcrawler_spark.config import CrawlConfig
+from jcrawler_spark.engine import CrawlEngine, SyntheticFetcher
+from jcrawler_spark.operators.rank import (
+    pid_expr,
+    rank_from_offsets,
+    with_global_rank,
+)
 from jcrawler_spark.plans.tableio import SnapshotStore
 
 
@@ -44,6 +54,129 @@ def test_global_rank_empty(spark):
     assert total == 0
     assert ranked.count() == 0
     cache.unpersist()
+
+
+SORT = ["src_order_key", "order_in_page", "url"]
+
+
+def _rank_kernel(spark, rows, npart, span):
+    """rank_from_offsets over ``rows`` with the engine's pid and offsets
+    (counts per pid, accumulated in pid order), next to the global
+    row_number() over the same sort it must equal."""
+    df = spark.createDataFrame(
+        rows, "src_order_key long, order_in_page int, url string"
+    ).withColumn("__pid", pid_expr(F.col("src_order_key"), npart, span))
+    offsets, n = {}, 0
+    for r in df.groupBy("__pid").count().orderBy("__pid").collect():
+        offsets[r["__pid"]] = n
+        n += r["count"]
+    ranked = rank_from_offsets(df, SORT, offsets)
+    assert "__pid" not in ranked.columns
+    got = {(r[0], r[1], r[2]): r["rank"] for r in ranked.collect()}
+    want = {
+        (r[0], r[1], r[2]): r["want"]
+        for r in df.withColumn(
+            "want", F.row_number().over(Window.orderBy(*SORT)) - 1
+        ).collect()
+    }
+    assert got == want
+    assert sorted(got.values()) == list(range(len(rows)))
+    return offsets
+
+
+def test_rank_from_offsets_equals_global_row_number(spark):
+    # 32 pids over the session's 8 shuffle partitions: several pids share
+    # a partition. Keys 50..59 (pid 5) are left out, so one pid is empty;
+    # parents repeat with several in-page positions, and one position
+    # repeats with different urls (the url breaks the tie).
+    keys = [k for k in range(0, 320, 3) if not 50 <= k < 60]
+    rows = [
+        (k, pos, f"https://h{k % 7}.example/{k}/{pos}")
+        for k in keys
+        for pos in range(k % 4 + 1)
+    ]
+    rows += [(9, 0, "https://a.example/tie"), (9, 0, "https://b.example/tie")]
+    random.Random(5).shuffle(rows)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) < 32
+    offsets = _rank_kernel(spark, rows, npart=32, span=320)
+    assert 5 not in offsets and len(offsets) > 8
+
+
+def test_rank_from_offsets_single_row(spark):
+    assert _rank_kernel(
+        spark, [(7, 0, "https://h.example/")], npart=4, span=10
+    ) == {2: 0}
+
+
+def test_frontier_write_has_no_python_rank(spark, tmp_path):
+    """The inline rank of a superstep's new frontier rows runs in the JVM:
+    the frontier_add write plan has no MapInPandas node (the sampled
+    with_global_rank path, which still has one, is the control)."""
+    n, h = 60, 4
+    pages = corpus.build_pages_df(spark, n, h, partitions=4).cache()
+    root = str(tmp_path / "state")
+    cfg = CrawlConfig(
+        accept=[f"host{i}.example" for i in range(h)],
+        max_docs=100,
+        max_connections=None,
+    )
+    eng = CrawlEngine(spark, cfg, SyntheticFetcher(pages), root)
+    eng.seed([corpus.url_of(0, h)])
+    plans: list[str] = []
+    stage_append = eng.store.stage_append
+
+    def spy(table, df, superstep, replace=False):
+        if table == "frontier_add":
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return stage_append(table, df, superstep, replace)
+
+    eng.store.stage_append = spy
+    st = eng.step()
+    assert st.new_frontier > 0 and len(plans) == 1
+    assert "MapInPandas" not in plans[0]
+    ranked, _, ckpt = with_global_rank(spark.range(3), ["id"])
+    assert "MapInPandas" in (
+        ranked._jdf.queryExecution().optimizedPlan().toString()
+    )
+    drop_checkpoints([ckpt])
+    pages.unpersist()
+
+
+def test_sampled_rank_path_matches_inline(spark, tmp_path):
+    """rank_inline_max_wave=None ranks new frontier rows through the
+    sampled with_global_rank path; emission, order keys and the pending
+    frontier must equal the inline rank's, and no step checkpoint may
+    outlive its superstep."""
+    n, h = 60, 4
+    pages = corpus.build_pages_df(spark, n, h, partitions=4).cache()
+    pages.count()
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def crawl(name, **kw):
+        root = str(tmp_path / name)
+        cfg = CrawlConfig(
+            accept=[f"host{i}.example" for i in range(h)],
+            max_docs=100,
+            max_connections=None,
+            **kw,
+        )
+        eng = CrawlEngine(spark, cfg, SyntheticFetcher(pages), root)
+        before = persisted()
+        eng.run(seeds=[corpus.url_of(0, h)], max_supersteps=3)
+        assert persisted() <= before
+        cols = ["url", "order_key", "path_key", "superstep"]
+        pending = eng._read_frontier().select(*cols).collect()
+        return (
+            [tuple(r) for r in eng.emitted().select(*cols).collect()],
+            sorted(tuple(r) for r in pending),
+        )
+
+    inline = crawl("inline")
+    assert inline[0] and inline[1]
+    assert crawl("sampled", rank_inline_max_wave=None) == inline
+    pages.unpersist()
 
 
 def test_snapshot_store_commit_rollback_vacuum(spark, tmp_path):
